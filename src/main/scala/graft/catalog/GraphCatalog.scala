@@ -245,21 +245,10 @@ final class ParquetSnapshotCatalog(spark: SparkSession, root: String) extends Gr
   private def latestSnapshot(iri: String): Option[(Long, HPath)] =
     snapshotManifests(iri).lastOption
 
-  private def readManifestBytes(p: HPath): Array[Byte] = {
+  private def readManifestJson(p: HPath): com.fasterxml.jackson.databind.JsonNode = {
     val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-  }
-
-  private def parseManifest(p: HPath): Map[String, String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readManifestBytes(p))
-    node.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+    val bytes = try in.readAllBytes() finally in.close()
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
   }
 
   /** The full triple identity — set semantics are over every column. */
@@ -271,6 +260,10 @@ final class ParquetSnapshotCatalog(spark: SparkSession, root: String) extends Gr
    * Returns the snapshot id. Exactly-once: if the job dies before the
    * rename, the partial dir is invisible (no manifest names it) and a
    * rerun re-commits the next id.
+   *
+   * Every commit deduplicates the incoming rows on [[TripleKey]], so a
+   * snapshot is a triple SET whatever the caller hands in (a provenance
+   * bag, a first streaming batch).
    *
    * Append is a DELTA commit (the Iceberg append semantic): the incoming
    * rows are deduplicated, anti-joined against the current snapshot
@@ -341,31 +334,31 @@ final class ParquetSnapshotCatalog(spark: SparkSession, root: String) extends Gr
     val prev = latestSnapshot(resolved)
     val id = prev.map(_._1).getOrElse(0L) + 1
     val target = new HPath(graphDataDir(resolved), s"v$id-${GraphCatalog.nextNonce()}")
-    val paths: Seq[String] =
-      if (overwrite || prev.isEmpty) {
-        triples.write.mode(SaveMode.Overwrite).parquet(target.toString)
-        Seq(target.toString)
-      } else {
-        val prevPaths = manifestPaths(prev.get._2)
-        val prevDf = spark.read.parquet(prevPaths: _*)
-        // a silent select() here would DROP extra incoming columns (and
-        // surface a missing one as a generic AnalysisException) — fail
-        // loudly, naming the mismatch, before any data moves
-        val incoming = triples.columns.toSet
-        val expected = prevDf.columns.toSet
-        if (incoming != expected)
-          throw new IllegalArgumentException(
-            s"append to graph $resolved: column mismatch vs current snapshot — " +
-              s"missing ${(expected -- incoming).toSeq.sorted.mkString("[", ",", "]")}, " +
-              s"unexpected ${(incoming -- expected).toSeq.sorted.mkString("[", ",", "]")}")
-        val ordered = triples.select(prevDf.columns.map(col).toIndexedSeq: _*)
-        val delta = ordered.dropDuplicates(TripleKey).alias("d")
-          .join(prevDf.alias("prev"),
-            TripleKey.map(k => col(s"d.$k") <=> col(s"prev.$k")).reduce(_ && _),
-            "left_anti")
-        delta.write.mode(SaveMode.Overwrite).parquet(target.toString)
-        prevPaths :+ target.toString
-      }
+    val prevPaths = if (overwrite) None else prev.map(p => manifestPaths(p._2))
+    val prevDf = prevPaths.map(ps => spark.read.parquet(ps: _*))
+    val ordered = prevDf.fold(triples) { p =>
+      // a silent select() here would DROP extra incoming columns (and
+      // surface a missing one as a generic AnalysisException) — fail
+      // loudly, naming the mismatch, before any data moves
+      val incoming = triples.columns.toSet
+      val expected = p.columns.toSet
+      if (incoming != expected)
+        throw new IllegalArgumentException(
+          s"append to graph $resolved: column mismatch vs current snapshot — " +
+            s"missing ${(expected -- incoming).toSeq.sorted.mkString("[", ",", "]")}, " +
+            s"unexpected ${(incoming -- expected).toSeq.sorted.mkString("[", ",", "]")}")
+      triples.select(p.columns.map(col).toIndexedSeq: _*)
+    }
+    // set semantics for every commit: a graph snapshot never holds a
+    // duplicate triple, whether it is a first write, an overwrite or a delta
+    val rows = ordered.dropDuplicates(TripleKey)
+    val written = prevDf.fold(rows) { p =>
+      rows.alias("d").join(p.alias("prev"),
+        TripleKey.map(k => col(s"d.$k") <=> col(s"prev.$k")).reduce(_ && _),
+        "left_anti")
+    }
+    written.write.mode(SaveMode.Overwrite).parquet(target.toString)
+    val paths = prevPaths.getOrElse(Nil) :+ target.toString
     val manifest =
       s"""{"graph_iri": ${jstr(resolved)}, "snapshot_id": "$id", "paths": ${jarr(paths)},
          | "leading_comments": ${jarr(leadingComments)}}""".stripMargin
@@ -469,27 +462,20 @@ final class ParquetSnapshotCatalog(spark: SparkSession, root: String) extends Gr
 
   /** Live file sets of a snapshot: `paths` (delta-append layout), with
     * `path` accepted for manifests committed before the multi-path format. */
-  private def manifestPaths(manifest: HPath): Seq[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val m = mapper.readTree(readManifestBytes(manifest))
+  private def manifestPaths(manifest: HPath): Seq[String] =
+    pathsOf(readManifestJson(manifest))
+
+  private def pathsOf(m: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
     if (m.has("paths")) m.get("paths").elements().asScala.map(_.asText()).toSeq
     else Seq(m.get("path").asText())
-  }
 
   private def readManifest(manifest: HPath): (Seq[String], DataFrame) = {
-    val bytes = readManifestBytes(manifest)
-    val m = {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      mapper.readTree(bytes)
-    }
+    val m = readManifestJson(manifest)
     val comments =
       if (m.has("leading_comments"))
         m.get("leading_comments").elements().asScala.map(_.asText()).toSeq
       else Nil
-    val paths =
-      if (m.has("paths")) m.get("paths").elements().asScala.map(_.asText()).toSeq
-      else Seq(m.get("path").asText())
-    (comments, spark.read.parquet(paths: _*))
+    (comments, spark.read.parquet(pathsOf(m): _*))
   }
 
   /** Time travel: every snapshot's data dir and manifest are immutable

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.model.Turn
+import graft.model.{TermKind, Turn}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
@@ -223,6 +223,14 @@ object Extraction {
       col("conv_id"), col("turn_idx"))
     m.unionByName(structure).unionByName(roles).unionByName(tools)
   }
+
+  /** T3 triples as [[graft.model.TripleRow]] columns: every subject is an
+    * IRI, `o_kind` is the int term kind, and no object carries a datatype
+    * or language tag. Provenance columns are dropped. */
+  def tripleRows(triples: DataFrame): DataFrame = triples.select(
+    col("s"), lit(TermKind.Iri).as("s_kind"), col("p"),
+    col("o"), col("o_kind").cast("int").as("o_kind"),
+    lit(null).cast("string").as("o_dtype"), lit(null).cast("string").as("o_lang"))
 
   /**
    * T1+T2+T3 in ONE pass for the throughput path: the compositional

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.catalog.ParquetSnapshotCatalog
-import graft.model._
+import graft.model.Turn
 import graft.rdf.{DistributedRdf, RdfFormat}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,6 +27,9 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  * table (stage, rows, partitions, seconds, rows_per_sec, input_stages).
  */
 object Pipeline {
+
+  /** The named graph T5 commits the triple set to. */
+  private val GraphIri = "urn:graft:conversation-graph"
 
   final case class StageMetric(
       stage: String, rows: Long, partitions: Int, seconds: Double,
@@ -54,14 +57,7 @@ object Pipeline {
     /** Committed row count from a stage's `_COMMIT.json`, -1 if absent. */
     private def committedRows(name: String): Long = {
       val in = fs.open(manifest(name))
-      val bytes =
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          out.toByteArray
-        } finally in.close()
+      val bytes = try in.readAllBytes() finally in.close()
       val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
       if (node.has("rows")) node.get("rows").asLong() else -1L
     }
@@ -146,14 +142,7 @@ object Pipeline {
     val cfg = s"""{"dedup_first": $dedupFirst}"""
     if (fs.exists(p)) {
       val in = fs.open(p)
-      val prev =
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          new String(out.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
+      val prev = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
       if (prev != cfg)
         throw new IllegalArgumentException(
           s"workDir $workDir was created with config $prev; rerun with the same " +
@@ -208,27 +197,17 @@ object Pipeline {
       Extraction.triples(mentions.as[Mention], canonical, transcripts)
     }
 
-    // T5: materialize as a named graph in the catalog (partitioned, snapshotted)
+    // T5: materialize as a named graph in the catalog (partitioned,
+    // snapshotted); the catalog commit drops provenance duplicates
+    lazy val catalog = new ParquetSnapshotCatalog(spark, s"$workDir/catalog")
     if (!runner.isDone("t5_materialize")) {
-      val catalog = new ParquetSnapshotCatalog(spark, s"$workDir/catalog")
-      val asTripleRows = triples.select(
-        col("s"), lit(TermKind.Iri).as("s_kind"), col("p"),
-        col("o"), col("o_kind"),
-        lit(null).cast("string").as("o_dtype"),
-        lit(null).cast("string").as("o_lang"))
-      catalog.write("urn:graft:conversation-graph", asTripleRows)
+      catalog.write(GraphIri, Extraction.tripleRows(triples))
       runner.commitMarker("t5_materialize", "{}")
     }
 
-    // T6: rdfx-compatible serialization of the (deduplicated) graph as NT shards
+    // T6: rdfx-compatible serialization of the committed graph as NT shards
     if (!runner.isDone("t6_serialize")) {
-      val distinctTriples = triples.select(
-        col("s"), lit(TermKind.Iri).as("s_kind"), col("p"),
-        col("o"), col("o_kind"),
-        lit(null).cast("string").as("o_dtype"),
-        lit(null).cast("string").as("o_lang"))
-        .dropDuplicates("s", "p", "o", "o_kind")
-      DistributedRdf.writeNt(distinctTriples, s"$workDir/t6_serialize/nt")
+      DistributedRdf.writeNt(catalog.read(GraphIri)._2, s"$workDir/t6_serialize/nt")
       runner.commitMarker("t6_serialize", "{}")
     }
 

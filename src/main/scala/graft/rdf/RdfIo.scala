@@ -126,13 +126,7 @@ object RdfIo {
     val p = hPath(uri)
     val fs = fsFor(p)
     val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+    try in.readAllBytes() finally in.close()
   }
 
   /** File/S3/HDFS read by URI: infer format from extension, scrape comments when Turtle. */

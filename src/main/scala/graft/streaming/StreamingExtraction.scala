@@ -233,14 +233,9 @@ object StreamingExtraction {
         if (!batch.isEmpty) {
           val mentions = Extraction.mentions(spark, batch)
           val triples = Extraction.triples(mentions, currentCanonical, batch.toDF())
-          val asRows = triples.select(
-            col("s"), lit(graft.model.TermKind.Iri).as("s_kind"), col("p"),
-            col("o"), col("o_kind"),
-            lit(null).cast("string").as("o_dtype"),
-            lit(null).cast("string").as("o_lang"))
           // overwrite=false: first batch seeds v1, every later batch is a
           // delta commit (only genuinely-new triples are written)
-          catalog.write(graphIri, asRows, overwrite = false)
+          catalog.write(graphIri, Extraction.tripleRows(triples), overwrite = false)
           if (refreshCanonicalEvery > 0) {
             Extraction.linkEdges(mentions).write.mode("append").parquet(edgesDir)
             if ((batchId + 1) % refreshCanonicalEvery == 0) {
@@ -313,7 +308,7 @@ object StreamingExtraction {
     * refreshed mapping and commit the result as one overwrite snapshot.
     * Only `urn:graft:mentions` objects are entity IRIs; everything else
     * passes through untouched. Rows that collapse onto the same canonical
-    * object are deduplicated (set semantics). */
+    * object are deduplicated by the catalog commit (set semantics). */
   private def remapGraph(catalog: graft.catalog.GraphCatalog, graphIri: String,
                          canonical: DataFrame): Unit = {
     val (comments, df) = catalog.read(graphIri)
@@ -325,7 +320,7 @@ object StreamingExtraction {
       .join(mapping, Seq("__ent"), "left")
       .withColumn("o", concat(lit("urn:"), coalesce(col("__canon"), col("__ent"))))
       .drop("__ent", "__canon")
-    val out = remapped.unionByName(df.where(!isMention)).dropDuplicates()
+    val out = remapped.unionByName(df.where(!isMention))
     catalog.write(graphIri, out, overwrite = true, leadingComments = comments)
   }
 }

@@ -267,6 +267,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("resume validation failed"))
   }
 
+  test("T5 catalog and T6 N-Triples hold exactly the distinct T3 triple set") {
+    val work = java.nio.file.Files.createTempDirectory("graftpipeset").toString
+    val t3 = Pipeline.run(spark, sfDir, work)
+    val distinct = t3.select("s", "p", "o", "o_kind").distinct().count()
+    assert(t3.count() > distinct) // T3 is a provenance bag: duplicates exist
+    val catalogRows = new graft.catalog.ParquetSnapshotCatalog(spark, s"$work/catalog")
+      .count("urn:graft:conversation-graph")
+    val ntLines = spark.read.text(s"$work/t6_serialize/nt")
+      .where(length(col("value")) > 0).count()
+    assert(catalogRows == distinct)
+    assert(ntLines == distinct)
+  }
+
   test("pipeline run is deterministic and resumable (file:// URI workDir)") {
     import java.nio.file.{Files, Paths}
     val localWork = Files.createTempDirectory("graftpipe").toString

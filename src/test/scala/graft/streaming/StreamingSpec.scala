@@ -156,6 +156,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
     assert(streamedSet == batchSet)
     assert(streamedSet.nonEmpty)
+    // set semantics from the first snapshot on: no duplicate rows anywhere
+    assert(cat.count(iri) == batchSet.size)
   }
 
   test("incremental graph with in-job maintenance keeps snapshot history bounded") {

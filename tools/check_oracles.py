@@ -54,6 +54,12 @@ def norm(v):
     return v
 
 
+def row_key(row):
+    """Sort key that orders None after every value of a column, so a
+    nullable column mixing None with values sorts instead of raising."""
+    return tuple((v is None, v) for v in row)
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
@@ -101,10 +107,10 @@ def main():
             print(f"[ROWS] {name}: duck={duck.num_rows} spark={spark.num_rows}")
             n_fail += 1
             continue
-        dv = sorted(tuple(norm(row[c]) for c in d_cols)
-                    for row in duck.to_pylist())
-        sv = sorted(tuple(norm(row[c]) for c in d_cols)
-                    for row in spark.to_pylist())
+        dv = sorted((tuple(norm(row[c]) for c in d_cols)
+                     for row in duck.to_pylist()), key=row_key)
+        sv = sorted((tuple(norm(row[c]) for c in d_cols)
+                     for row in spark.to_pylist()), key=row_key)
         if dv != sv:
             diffs = [(a, b) for a, b in zip(dv, sv) if a != b][:3]
             print(f"[VALUES] {name}: first diffs {diffs}")
