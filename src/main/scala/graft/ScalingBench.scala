@@ -1,7 +1,9 @@
 package graft
 
 import graft.model._
+import graft.obs.StageMetrics
 import graft.pipeline._
+import graft.tools.ClusterSmoke
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,15 +113,8 @@ object ScalingBench {
   /** JDK17 module opens + per-core sizing for forked executor JVMs
    *  (mirrors build.sbt's driver-side options, incl. the GC choice the
    *  round-4 experiments selected). */
-  private def executorJavaOptions(cores: Int, memMb: Int): String = (Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED") ++ Seq(
+  private def executorJavaOptions(cores: Int, memMb: Int): String = Seq(
+    ClusterSmoke.executorJavaOptions,
     s"-XX:+${sys.env.getOrElse("SPARK_JVM_GC", "UseParallelGC")}",
     // each executor JVM believes it has its worker's cores, like a real
     // C-core node (GC/JIT/netty pools size from this)
@@ -128,7 +123,7 @@ object ScalingBench {
     // the FIRST measured rep cost 400+ GC core-seconds per observed run
     // (rep-1 outliers in BENCH.md round 5); Spark only sets -Xmx
     s"-Xms${memMb}m",
-  )).mkString(" ")
+  ).mkString(" ")
 
   private def session(level: Level): SparkSession = {
     val b = SparkSession.builder()
@@ -188,47 +183,22 @@ object ScalingBench {
     // time / CPU time / GC time per level. On this one-box proxy the
     // N->4N gap shows up as EXTRA CPU-reported seconds at 32 threads
     // (memory-stall cycles count as CPU time) — core-seconds that a real
-    // 4N-node cluster, with 4N memory buses, does not burn.
-    val runMs = new java.util.concurrent.atomic.AtomicLong
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        runMs.addAndGet(m.executorRunTime)
-        cpuNs.addAndGet(m.executorCpuTime)
-        gcMs.addAndGet(m.jvmGCTime)
-      }
-    })
-    // the listener bus is async: stage-completed events can land after the
-    // action returns (and would otherwise leak into the NEXT rep's window).
-    // Poll until the counters are stable before reading or resetting.
-    def drainListenerBus(): Unit = {
-      var prev = -1L
-      var stable = 0
-      var waitedMs = 0
-      while (stable < 3 && waitedMs < 10000) {
-        val cur = runMs.get ^ (cpuNs.get * 31) ^ (gcMs.get * 961)
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        Thread.sleep(100); waitedMs += 100
-      }
-    }
+    // 4N-node cluster, with 4N memory buses, does not burn. One job group
+    // per rep keeps each rep's tasks apart.
+    val metrics = StageMetrics.install(spark.sparkContext)
     // warmup: JIT + codegen + parquet footers (and, in cluster mode,
     // executor registration), not measured
     runJob(spark, sfDir, 1, s"/tmp/graft-scaling-warmup-$outTag")
     val stats = (1 to repeats).map { rep =>
-      drainListenerBus()
-      runMs.set(0); cpuNs.set(0); gcMs.set(0)
+      val group = s"scaling-rep-$rep"
       val t0 = System.nanoTime()
-      val triples = runJob(spark, sfDir, replication, s"/tmp/graft-scaling-out-$outTag")
+      val triples = metrics.inGroup(group)(
+        runJob(spark, sfDir, replication, s"/tmp/graft-scaling-out-$outTag"))
       val secs = (System.nanoTime() - t0) / 1e9
-      drainListenerBus()
-      val cpuS = cpuNs.get / 1e9
-      val runS = runMs.get / 1000.0
-      val gcShare = if (runS > 0) (gcMs.get / 1000.0) / runS else 0.0
-      println(f"""{"rep": $rep, "level": "${level.label}", "seconds": $secs%.2f, "executor_run_sec": $runS%.1f, "executor_cpu_sec": $cpuS%.1f, "gc_sec": ${gcMs.get / 1000.0}%.1f, "gc_share": $gcShare%.3f, "triples_per_sec": ${triples / secs}%.0f}""")
-      RepStat(rep, secs, triples, cpuS, gcShare)
+      val m = metrics(group)
+      val gcShare = if (m.runS > 0) m.gcS / m.runS else 0.0
+      println(f"""{"rep": $rep, "level": "${level.label}", "seconds": $secs%.2f, "executor_run_sec": ${m.runS}%.1f, "executor_cpu_sec": ${m.cpuS}%.1f, "gc_sec": ${m.gcS}%.1f, "gc_share": $gcShare%.3f, "triples_per_sec": ${triples / secs}%.0f}""")
+      RepStat(rep, secs, triples, m.cpuS, gcShare)
     }
     // ---- mechanical clean-leg adjudication (round-5 finding made protocol:
     // the job's work is scale-invariant, so a leg whose cpu core-seconds

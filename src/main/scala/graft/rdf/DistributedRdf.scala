@@ -27,60 +27,50 @@ object DistributedRdf {
 
   /**
    * Distributed N-Triples scan: splittable text source, per-line parse.
-   *
-   * The default (`saltPerFile = false`) treats the whole path as ONE
-   * logical document/label space — the round-trip contract for reading
-   * back a [[writeNt]] output directory, where salting would silently
-   * split a blank node whose triples straddle a shard boundary into two
-   * nodes (the data-corrupting direction; hence the conservative default).
-   *
-   * With `saltPerFile = true` (or [[readNtMerged]]), blank-node labels are
-   * salted with a per-source-file token (64-bit FNV-1a of the path — a
-   * 32-bit hash collides near 10^5 files): NT bnode labels are
-   * document-scoped, so identical labels in different files of a
-   * multi-file glob are DISTINCT nodes — rdflib's
-   * fresh-bnodes-per-parse MERGE semantics, opt-in.
+   * The whole path is ONE logical document/label space — the round-trip
+   * contract for reading back a [[writeNt]] output directory, where
+   * salting would silently split a blank node whose triples straddle a
+   * shard boundary into two nodes (the data-corrupting direction). Use
+   * [[readNtMerged]] to merge independent documents.
    */
-  def readNt(spark: SparkSession, path: String,
-             saltPerFile: Boolean = false): Dataset[TripleRow] = {
+  def readNt(spark: SparkSession, path: String): Dataset[TripleRow] = {
     import spark.implicits._
-    if (!saltPerFile)
-      spark.read.textFile(path).mapPartitions { lines =>
-        lines.flatMap(l => NtCodec.parseLine(l).map(TripleRow.fromTriple))
-      }
-    else
-      spark.read.text(path)
-        .select(input_file_name().as("f"), $"value")
-        .as[(String, String)]
-        .mapPartitions { lines =>
-          lines.flatMap { case (file, l) =>
-            val salt = java.lang.Long.toHexString(fnv64(file))
-            NtCodec.parseLine(l).map(t => TripleRow.fromTriple(saltBnodes(t, salt)))
-          }
-        }
+    spark.read.textFile(path).mapPartitions(
+      _.flatMap(l => NtCodec.parseLine(l).map(TripleRow.fromTriple)))
   }
 
   /**
    * Multi-file N-Triples MERGE read: each source file is its own bnode
-   * label space (per-file salting), matching rdflib's
+   * label space (per-file salting, [[fileSalt]]), matching rdflib's
    * fresh-bnode-ids-per-parse behavior when merging independent documents
-   * (SURVEY O6). Use [[readNt]] (unsalted) to read back one [[writeNt]]
-   * output directory.
+   * (SURVEY O6): identical labels in different files are DISTINCT nodes.
    */
-  def readNtMerged(spark: SparkSession, path: String): Dataset[TripleRow] =
-    readNt(spark, path, saltPerFile = true)
+  def readNtMerged(spark: SparkSession, path: String): Dataset[TripleRow] = {
+    import spark.implicits._
+    spark.read.text(path)
+      .select(input_file_name().as("f"), $"value")
+      .as[(String, String)]
+      .mapPartitions(_.flatMap { case (file, l) =>
+        NtCodec.parseLine(l).map(t => TripleRow.fromTriple(saltBnodes(t, fileSalt(file))))
+      })
+  }
 
-  /** FNV-1a 64-bit — stable, dependency-free path hash for bnode salts. */
-  private def fnv64(s: String): Long = {
+  /**
+   * Per-source-file blank-node salt: 64-bit FNV-1a of the path, stable and
+   * dependency-free (a 32-bit hash such as `String.hashCode` collides near
+   * 10^5 files, and already on short names: "Aa" and "BB").
+   */
+  private def fileSalt(path: String): String = {
     var h = 0xcbf29ce484222325L
     var i = 0
-    while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-    h
+    while (i < path.length) { h ^= path.charAt(i); h *= 0x100000001b3L; i += 1 }
+    java.lang.Long.toHexString(h)
   }
 
   /**
    * Distributed read of whole-document formats: one file per row via the
-   * binaryFile source, parsed per-partition. `pathGlob` may use glob stars.
+   * binaryFile source, parsed per-partition, blank nodes salted per file.
+   * `pathGlob` may use glob stars.
    */
   def readDocs(spark: SparkSession, pathGlob: String, format: RdfFormat): Dataset[TripleRow] = {
     import spark.implicits._
@@ -90,7 +80,7 @@ object DistributedRdf {
       .mapPartitions { files =>
         files.flatMap { case (path, bytes) =>
           val doc = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          val salt = Integer.toHexString(path.hashCode)
+          val salt = fileSalt(path)
           RdfIo.parse(doc, format).triples.iterator.map { t =>
             TripleRow.fromTriple(saltBnodes(t, salt))
           }
@@ -98,7 +88,8 @@ object DistributedRdf {
       }
   }
 
-  private def saltBnodes(t: Triple, salt: String): Triple = {
+  /** Prefix every blank-node label with `salt`, giving one label space per source. */
+  private[rdf] def saltBnodes(t: Triple, salt: String): Triple = {
     def f(x: RdfTerm) = if (x.isBNode) x.copy(value = s"${salt}_${x.value}") else x
     Triple(f(t.s), t.p, f(t.o))
   }
@@ -156,25 +147,6 @@ object DistributedRdf {
     ntLines(triples).write.mode("overwrite").text(path)
 
   /**
-   * Serialize a (small enough to render as one document) graph to a
-   * single-doc format. Deterministic: sorts, collects to the driver, applies
-   * the byte-compatible codec. Guarded by `maxTriples` — single-document
-   * Turtle/JSON-LD/XML output is inherently a single-writer operation; at
-   * 100 TB you shard by named graph and emit NT for bulk interchange
-   * (`writeNt`), which is the documented scale path.
-   */
-  def serializeDoc(triples: Dataset[TripleRow], format: RdfFormat,
-                   prefixes: Map[String, String] = Map.empty,
-                   maxTriples: Int = 5000000): String = {
-    val rows = triples
-      .orderBy("s_kind", "s", "p", "o_kind", "o", "o_dtype", "o_lang")
-      .limit(maxTriples + 1).collect()
-    require(rows.length <= maxTriples,
-      s"graph exceeds $maxTriples triples; use writeNt for bulk serialization")
-    RdfIo.serialize(ParsedGraph(rows.map(_.asTriple).toVector, prefixes), format)
-  }
-
-  /**
    * Distributed single-doc-format export, sharded BY NAMED GRAPH: each
    * graph serializes as one Turtle/JSON-LD/RDF-XML document, graphs in
    * parallel across the cluster — T6 at scale for the formats that are not
@@ -182,8 +154,7 @@ object DistributedRdf {
    * (repartition on graph_iri) co-locates each graph on one task; the task
    * serializes with the SAME byte-compatible driver codecs and writes
    * `<dir>/<urlencoded-graph-iri>.<ext>` through Hadoop FileSystem (any
-   * scheme). Bound: one GRAPH (not the corpus) must fit a task — the same
-   * contract as [[serializeDoc]], now applied per graph instead of globally.
+   * scheme). Bound: one GRAPH (not the corpus) must fit a task.
    *
    * Output bytes are identical to `RdfIo.writeFile` of the same triple set
    * (serializer-internal sorts make row order irrelevant; the same

@@ -1,6 +1,5 @@
 package graft.rdf
 
-import graft.model._
 import java.nio.file.{Path, Paths}
 
 /**
@@ -63,7 +62,7 @@ object GraphOps {
     }
     val merged = fileUris.zipWithIndex.map { case (f, i) =>
       val (_, g) = RdfIo.readFile(f)
-      ParsedGraph(g.triples.map(saltBnodes(_, s"f$i")), g.prefixes)
+      ParsedGraph(g.triples.map(DistributedRdf.saltBnodes(_, s"f$i")), g.prefixes)
     }.foldLeft(ParsedGraph.empty)(_ union _)
     RdfIo.writeFile(merged, outputDirUri, outputFilename, outputFormatToken, leadingComments)
   }
@@ -73,12 +72,6 @@ object GraphOps {
             leadingComments: Seq[String] = Nil): Path =
     Paths.get(mergeUris(files.map(_.toString), outputDir.toString, outputFormatToken,
       outputFilename, leadingComments))
-
-  private def saltBnodes(t: Triple, salt: String): Triple = {
-    def f(term: RdfTerm): RdfTerm =
-      if (term.isBNode) term.copy(value = s"${salt}_${term.value}") else term
-    Triple(f(t.s), t.p, f(t.o))
-  }
 
   /**
    * clean (rdfx_cli.py:106-152): preserve leading comments, prune prefix

@@ -177,8 +177,8 @@ final class SopStore(spark: SparkSession, catalog: GraphCatalog,
   }
 
   /** read by graph IRI/URN → (leading comments, driver-side graph). Bounded
-    * by maxTriples like DistributedRdf.serializeDoc (one asset graph, not a
-    * corpus). */
+    * by maxTriples: one asset graph is collected to the driver, not a
+    * corpus. */
   def read(graphIri: String, maxTriples: Int = 5000000): (Seq[String], ParsedGraph) = {
     val resolved = graft.catalog.GraphCatalog.resolveGraphIri(graphIri)
     val (comments, df) = catalog.read(resolved)
@@ -221,42 +221,34 @@ final class SopStore(spark: SparkSession, catalog: GraphCatalog,
   }
 }
 
+/** The validating stub the reference ships for its SPARQL-server systems:
+  * the constructor checks its arguments, and write validates the graph IRI
+  * then raises NotImplemented. */
+sealed abstract class ServerStub(val name: String, location: String, repoId: String)
+    extends PersistenceSystem {
+  if (location == null || !location.startsWith("http"))
+    throw new IllegalArgumentException(
+      s"The value you supplied for location ($location) is not valid")
+  if (repoId == null)
+    throw new IllegalArgumentException("The value you supplied for repo_id cannot be None")
+  def write(g: ParsedGraph, graphIri: String): Nothing = {
+    if (graphIri != null && !(graphIri.startsWith("http") || graphIri.startsWith("urn")))
+      throw new IllegalArgumentException(
+        s"The value you supplied for graph_iri ($graphIri) is not valid")
+    throw new NotImplementedError(s"$name write is unimplemented in the reference (v0.4.11)")
+  }
+}
+
 /** S4 GraphDB — the reference ships a validating stub whose write raises
   * NotImplemented (persistence_systems.py:312-356); same here. */
 final class GraphDbStore(location: String, repoId: String,
                          username: String = null, password: String = null)
-    extends PersistenceSystem {
-  val name = "GraphDB"
-  if (location == null || !location.startsWith("http"))
-    throw new IllegalArgumentException(
-      s"The value you supplied for location ($location) is not valid")
-  if (repoId == null)
-    throw new IllegalArgumentException("The value you supplied for repo_id cannot be None")
-  def write(g: ParsedGraph, graphIri: String): Nothing = {
-    if (graphIri != null && !(graphIri.startsWith("http") || graphIri.startsWith("urn")))
-      throw new IllegalArgumentException(
-        s"The value you supplied for graph_iri ($graphIri) is not valid")
-    throw new NotImplementedError("GraphDB write is unimplemented in the reference (v0.4.11)")
-  }
-}
+    extends ServerStub("GraphDB", location, repoId)
 
 /** S5 Fuseki — identical stub shape (persistence_systems.py:359-399). */
 final class FusekiStore(location: String, repoId: String,
                         username: String = null, password: String = null)
-    extends PersistenceSystem {
-  val name = "Fuseki"
-  if (location == null || !location.startsWith("http"))
-    throw new IllegalArgumentException(
-      s"The value you supplied for location ($location) is not valid")
-  if (repoId == null)
-    throw new IllegalArgumentException("The value you supplied for repo_id cannot be None")
-  def write(g: ParsedGraph, graphIri: String): Nothing = {
-    if (graphIri != null && !(graphIri.startsWith("http") || graphIri.startsWith("urn")))
-      throw new IllegalArgumentException(
-        s"The value you supplied for graph_iri ($graphIri) is not valid")
-    throw new NotImplementedError("Fuseki write is unimplemented in the reference (v0.4.11)")
-  }
-}
+    extends ServerStub("Fuseki", location, repoId)
 
 /** `PERSISTENCE_SYSTEMS` registry parity (persistence_systems.py:888). */
 object PersistenceSystems {

@@ -214,35 +214,18 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a stage runs exactly ONE Spark job: the row count rides the write") {
     import java.nio.file.Files
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        names.add(js.stageInfos.map(_.name).mkString("|"))
-      }
-    }
-    // settle straggling listener events from earlier tests before counting
-    Thread.sleep(300)
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = graft.obs.StageMetrics.install(spark.sparkContext)
     try {
       val work = Files.createTempDirectory("graftstagejobs").toString
       val runner = new Pipeline.Runner(spark, work)
       import spark.implicits._
       val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      runner.stage("s1", Seq("in")) { df }
-      // the listener bus is async: wait for the job count to stabilize
-      var last = -1
-      var cur = jobs.get()
-      var spins = 0
-      while ((cur != last || cur == 0) && spins < 25) {
-        last = cur; Thread.sleep(200); cur = jobs.get(); spins += 1
-      }
-      assert(cur == 1, s"expected exactly 1 job for the stage (the write, with the " +
-        s"count riding it as an observe metric), saw $cur: " +
-        names.toArray.mkString("[", " ;; ", "]"))
+      metrics.inGroup("stage-s1")(runner.stage("s1", Seq("in")) { df })
+      val jobs = metrics("stage-s1").jobs
+      assert(jobs == 1, s"expected exactly 1 job for the stage (the write, with the " +
+        s"count riding it as an observe metric), saw $jobs")
       assert(runner.collectedMetrics.head.rows == 3L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally metrics.remove()
   }
 
   test("resume validates committed row counts: a corrupted stage fails loudly") {

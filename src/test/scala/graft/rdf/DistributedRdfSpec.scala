@@ -27,6 +27,18 @@ class DistributedRdfSpec extends AnyFunSuite {
     assert(rows.forall(_.s_kind == graft.model.TermKind.BNode))
   }
 
+  test("readDocs keeps the blank nodes of two files apart when their paths share a String.hashCode") {
+    val dir = Files.createTempDirectory("graftdocs")
+    // "Aa" and "BB" have equal String.hashCode, so equal 32-bit path hashes
+    for (name <- Seq("Aa", "BB"))
+      Files.write(dir.resolve(s"$name.ttl"),
+        s"""[] <http://ex/p> "$name" .\n""".getBytes(StandardCharsets.UTF_8))
+    assert(dir.resolve("Aa.ttl").toString.hashCode == dir.resolve("BB.ttl").toString.hashCode)
+    val rows = DistributedRdf.readDocs(spark, dir.toString + "/*.ttl", RdfFormat.Turtle).collect()
+    assert(rows.map(_.o).toSet == Set("Aa", "BB"))
+    assert(rows.map(_.s).toSet.size == 2, s"blank nodes conflated across files: ${rows.toSeq}")
+  }
+
   test("per-graph Turtle/JSON-LD shards are byte-equal to the driver-side codec output") {
     import graft.model._
     import spark.implicits._
